@@ -56,7 +56,14 @@ def main() -> None:
                 "pass id and blob column names as argv[4] argv[5]"
             )
         blob_col = bins[0]
-        id_col = next(c for c in df.columns if c != blob_col)
+        others = [c for c in df.columns if c != blob_col]
+        if not others:
+            raise SystemExit(
+                f"no id column besides {blob_col!r} in {in_path} "
+                f"(columns: {df.dtypes}); "
+                "pass id and blob column names as argv[4] argv[5]"
+            )
+        id_col = others[0]
     feats = resize_features(df, id_col, blob_col, grid, grid,
                             decoder=image_decoder)
     feats.write.mode("overwrite").parquet(out_path)

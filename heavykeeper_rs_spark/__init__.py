@@ -22,6 +22,12 @@ Public surface:
 
 __version__ = "0.1.0"
 
+from . import zipcache
+
+# Spark workers re-read every zip archive on sys.path before each task
+# unless this is installed; see zipcache.py
+zipcache.install()
+
 from .errors import (  # noqa: F401
     BuilderError,
     HeavyKeeperError,

@@ -65,16 +65,6 @@ _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
 
 
-def _hash_key_for_seed(seed: int) -> str:
-    """16-byte hash key for pandas' SipHash, derived from the sketch seed.
-
-    Mirrors the role of ``ahash::RandomState::with_seeds(seed,..)``
-    (src/heavykeeper.rs:118-121): same seed => same hash function =>
-    merge-compatible sketches.
-    """
-    return format(seed & 0xFFFFFFFFFFFFFFFF, "016x")
-
-
 def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
     with np.errstate(over="ignore"):
         x = (x ^ (x >> _U64(30))) * _U64(0xBF58476D1CE4E5B9)
@@ -322,6 +312,26 @@ class TopKQueue:
         self._prune()
         return self._heap[0][0] if self._heap else 0
 
+    def candidates(self, counts: np.ndarray) -> np.ndarray:
+        """Indices of the batch ``counts`` (one per distinct key) whose
+        upserts, made in (count desc, key asc) order, can change the
+        queue; every other upsert of the batch is a no-op.
+
+        Only keys above ``min_count()`` qualify, and of those only the
+        first k in that order. Each of those k leaves its upsert either
+        in the queue at a count no later (no heavier) key strictly
+        beats, so it stays, or refused by a full queue whose minimum is
+        then at least every later count and only grows. Either way the
+        later upserts change nothing. The cut keeps every key tied with
+        the k-th count, so the key tie-break among the kept keys is the
+        full loop's."""
+        sel = np.flatnonzero(counts > self.min_count())
+        if sel.size > self.k:
+            c = counts[sel]
+            cut = np.partition(c, sel.size - self.k)[sel.size - self.k]
+            sel = sel[c >= cut]
+        return sel
+
     def get(self, item: bytes) -> int | None:
         return self.counts.get(item)
 
@@ -357,6 +367,14 @@ class TopKQueue:
         self.seqs[item] = self._seq
         self._seq += 1
         heapq.heappush(self._heap, (count, self.seqs[item], item))
+
+    def mem_bytes(self, item_heap_fn=None) -> int:
+        """Bytes of the tracked keys: ``item_heap_fn(key)`` each, or by
+        default the key's length (8 for an int key), plus 96 per entry
+        for the dict and heap bookkeeping."""
+        if item_heap_fn is None:
+            return sum((8 if isinstance(k, int) else len(k)) + 96 for k in self.counts)
+        return sum(int(item_heap_fn(k)) + 96 for k in self.counts)
 
     def items_sorted(self) -> list[tuple[bytes, int]]:
         """(count desc, insertion seq asc) — src/priority_queue.rs:191-211."""
@@ -672,9 +690,8 @@ class HeavyKeeper:
         owned = np.where((fps_f == fp_flat) & (cnt_f > 0), cnt_f, 0)
         est = owned.reshape(p.depth, n).max(axis=0).astype(np.int64)
         # PQ update, vectorized pre-filter: only keys that can change
-        # the heap (est > heap min) need Python-level upserts.
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(est > mc)
+        # the heap (TopKQueue.candidates) need Python-level upserts.
+        sel = self.pq.candidates(est)
         evicted: list | None = [] if return_evicted else None
         if sel.size:
             # only now do the selected keys materialize (lazy take);
@@ -1325,16 +1342,13 @@ class HeavyKeeper:
         -> int`` returning the bytes an item owns beyond its inline
         representation (the Rust API takes ``item_heap: Fn(&T) ->
         usize``, e.g. ``String::capacity``; ``|_| 0`` for heap-free
-        T). When omitted, keys are costed at ``len(key) + 96`` — the
-        key's own bytes plus a fixed per-tracked-item overhead
+        T). When omitted, keys are costed at ``len(key) + 96`` (an int
+        key at 8 + 96, 8 being its inline u64 width) — the key's own
+        bytes plus a fixed per-tracked-item overhead
         covering this implementation's dict/heap entries, mirroring
         the reference's ``size_of::<Bucket>()`` + queue bookkeeping
         terms."""
-        if item_heap_fn is None:
-            items = sum(len(k) + 96 for k in self.pq.counts)
-        else:
-            items = sum(int(item_heap_fn(k)) + 96 for k in self.pq.counts)
-        return int(self.fps.nbytes + self.counts.nbytes + items)
+        return int(self.fps.nbytes + self.counts.nbytes + self.pq.mem_bytes(item_heap_fn))
 
     # -- O15: debug dump ---------------------------------------------------
     def describe(self) -> dict:
@@ -1425,18 +1439,7 @@ class HeavyKeeper:
             sk.counts = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
             off += 8 * cells
         else:  # sparse
-            (nnz,) = struct.unpack_from("<q", blob, off)
-            off += 8
-            if nnz < 0 or off + 24 * nnz > len(blob):
-                raise ValueError("bad sparse cell count")
-            idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
-            off += 8 * nnz
-            if nnz and (idx.min() < 0 or idx.max() >= cells):
-                raise ValueError("sparse cell index out of range")
-            fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-            off += 8 * nnz
-            cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-            off += 8 * nnz
+            idx, fps_nz, cnt_nz, off = _read_sparse_cells(blob, off, cells)
             sk.fps.reshape(-1)[idx] = fps_nz
             sk.counts.reshape(-1)[idx] = cnt_nz
         _sniff_legacy_pickle(blob[off : off + 2])
@@ -1569,6 +1572,29 @@ def _key_array(keys: list) -> np.ndarray:
     return np.asarray(keys, dtype=object)
 
 
+def _read_sparse_cells(blob: bytes, off: int, cells: int):
+    """(idx, fps, cnt, end offset) of a v2 blob's live-cell section at
+    ``off``. ``idx`` must be strictly increasing and inside the
+    ``cells`` grid: the O(nnz) merge scatters by it (a duplicate would
+    silently last-write-win) and ``_sparse_cell_max`` binary-searches
+    it."""
+    (nnz,) = struct.unpack_from("<q", blob, off)
+    off += 8
+    if nnz < 0 or off + 24 * nnz > len(blob):
+        raise ValueError("bad sparse cell count")
+    idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
+    off += 8 * nnz
+    if nnz and (idx[0] < 0 or idx[-1] >= cells):
+        raise ValueError("sparse cell index out of range")
+    if nnz > 1 and not (idx[1:] > idx[:-1]).all():
+        raise ValueError("sparse cell indices not strictly increasing")
+    fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
+    off += 8 * nnz
+    cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
+    off += 8 * nnz
+    return idx, fps_nz, cnt_nz, off
+
+
 def _parse_blob_sparse(blob: bytes):
     """(params, idx, fps, cnt, cand) views of a sparse (v2) blob, or
     None for dense/v1 blobs. Same validation as ``deserialize`` but no
@@ -1580,20 +1606,7 @@ def _parse_blob_sparse(blob: bytes):
     params = HKParams(
         k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed)
     )
-    cells = depth * width
-    off = hs
-    (nnz,) = struct.unpack_from("<q", blob, off)
-    off += 8
-    if nnz < 0 or off + 24 * nnz > len(blob):
-        raise ValueError("bad sparse cell count")
-    idx = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.int64)
-    off += 8 * nnz
-    if nnz and (idx.min() < 0 or idx.max() >= cells):
-        raise ValueError("sparse cell index out of range")
-    fps_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-    off += 8 * nnz
-    cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
-    off += 8 * nnz
+    idx, fps_nz, cnt_nz, off = _read_sparse_cells(blob, hs, depth * width)
     _sniff_legacy_pickle(blob[off : off + 2])
     cand = serde_loads(blob[off:])
     return params, idx, fps_nz, cnt_nz, cand

@@ -251,21 +251,6 @@ def _dict_encodable(t: pa.DataType) -> bool:
     )
 
 
-def _dict_preagg(col: pa.Array, w: np.ndarray | None):
-    """(distinct keys as object ndarray, per-key weight int64) via
-    Arrow dictionary_encode — the batch pre-aggregation done C-side."""
-    import pyarrow.compute as pc
-
-    d = pc.dictionary_encode(col)
-    idx = d.indices.to_numpy(zero_copy_only=False)
-    nd = len(d.dictionary)
-    if w is None:
-        wagg = np.bincount(idx, minlength=nd).astype(np.int64)
-    else:
-        wagg = np.bincount(idx, weights=w, minlength=nd).astype(np.int64)
-    return d.dictionary.to_numpy(zero_copy_only=False), wagg
-
-
 def _make_sketch(variant: str, params: HKParams, rng):
     if variant == "topk":
         return HeavyKeeper(params, rng=rng)

@@ -237,19 +237,11 @@ class _VariantBase:
         )
 
     # -- PQ ---------------------------------------------------------------
-    def _pq_update_batch(self, keys: np.ndarray, counts: np.ndarray) -> None:
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(counts > mc)
-        if sel.size:
-            order = sel[np.lexsort((np.asarray(keys[sel]), -counts[sel]))]
-            for i in order:
-                self.pq.upsert(_pq_key(keys[i]), int(counts[i]))
-
     def _pq_update_batch_lazy(self, key_take, counts: np.ndarray) -> None:
-        """PQ update that materializes ONLY the candidate keys (the
-        hashed-lane analog of ``_pq_update_batch``)."""
-        mc = self.pq.min_count()
-        sel = np.flatnonzero(counts > mc)
+        """PQ update that materializes ONLY the candidate keys
+        (``TopKQueue.candidates``), upserted in (count desc, key asc)
+        order."""
+        sel = self.pq.candidates(counts)
         if sel.size:
             ks = np.asarray(key_take(sel), dtype=object)
             csel = counts[sel]
@@ -562,9 +554,7 @@ class BucketedTopK(_VariantBase):
         return self
 
     def mem_bytes(self, item_heap_fn=None) -> int:
-        heap = item_heap_fn if item_heap_fn is not None else len
-        items = sum(int(heap(k)) + 96 for k in self.pq.counts)
-        return int(self.fps.nbytes + self.counts.nbytes + items)
+        return int(self.fps.nbytes + self.counts.nbytes + self.pq.mem_bytes(item_heap_fn))
 
 
 class CuckooTopK(_VariantBase):
@@ -1286,14 +1276,12 @@ class CuckooTopK(_VariantBase):
         return self
 
     def mem_bytes(self, item_heap_fn=None) -> int:
-        heap = item_heap_fn if item_heap_fn is not None else len
-        items = sum(int(heap(k)) + 96 for k in self.pq.counts)
         return int(
             self.lobby_fp.nbytes
             + self.lobby_c.nbytes
             + self.heavy_fp.nbytes
             + self.heavy_c.nbytes
-            + items
+            + self.pq.mem_bytes(item_heap_fn)
         )
 
 def deserialize_any(blob: bytes):
