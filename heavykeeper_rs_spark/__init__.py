@@ -39,3 +39,9 @@ from .errors import (  # noqa: F401
 )
 from .kernel import HeavyKeeper, HKParams, TopKQueue  # noqa: F401
 from .variants import BucketedTopK, CuckooTopK  # noqa: F401
+
+from . import gcfreeze
+
+# after the kernel imports, so numpy and pandas are in the frozen set
+# that PySpark's per-task gc.collect() no longer walks; see gcfreeze.py
+gcfreeze.install()

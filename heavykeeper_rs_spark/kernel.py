@@ -63,6 +63,8 @@ _DENSE_DOMAIN_CAP = int(os.environ.get("HK_DENSE_CAP", 1 << 22))
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"
+# magic, version (1 dense, 2 sparse), k, width, depth, decay, seed
+_HEADER = struct.Struct("<4sBqqqdq")
 
 
 def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
@@ -1408,7 +1410,7 @@ class HeavyKeeper:
         # shuffle; sparse ships 24 bytes per LIVE cell instead.
         if nz_flat.size * 3 < cells:
             buf.write(
-                struct.pack("<4sBqqqdq", _MAGIC, 2, p.k, p.width, p.depth, p.decay, p.seed)
+                _HEADER.pack(_MAGIC, 2, p.k, p.width, p.depth, p.decay, p.seed)
             )
             buf.write(struct.pack("<q", nz_flat.size))
             buf.write(nz_flat.astype(np.int64).tobytes())
@@ -1416,7 +1418,7 @@ class HeavyKeeper:
             buf.write(self.counts.reshape(-1)[nz_flat].tobytes())
         else:
             buf.write(
-                struct.pack("<4sBqqqdq", _MAGIC, 1, p.k, p.width, p.depth, p.decay, p.seed)
+                _HEADER.pack(_MAGIC, 1, p.k, p.width, p.depth, p.decay, p.seed)
             )
             buf.write(self.fps.tobytes())
             buf.write(self.counts.tobytes())
@@ -1425,26 +1427,24 @@ class HeavyKeeper:
 
     @classmethod
     def deserialize(cls, blob: bytes) -> "HeavyKeeper":
-        hs = struct.calcsize("<4sBqqqdq")
-        magic, ver, k, width, depth, decay, seed = struct.unpack("<4sBqqqdq", blob[:hs])
-        if magic != _MAGIC or ver not in (1, 2):
-            raise ValueError("not a HeavyKeeper v1/v2 blob")
-        params = HKParams(k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed))
-        sk = cls(params)
+        ver, params, off = _read_header(blob)
+        depth, width = params.depth, params.width
         cells = depth * width
-        off = hs
         if ver == 1:
-            sk.fps = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
+            # before allocating: the header's grid must be in the blob
+            if len(blob) < off + 16 * cells:
+                raise ValueError("truncated dense cell section")
+            sk = cls(params)
+            sk.fps = np.frombuffer(blob, np.uint64, cells, off).reshape(depth, width).copy()
             off += 8 * cells
-            sk.counts = np.frombuffer(blob[off : off + 8 * cells], dtype=np.uint64).reshape(depth, width).copy()
+            sk.counts = np.frombuffer(blob, np.uint64, cells, off).reshape(depth, width).copy()
             off += 8 * cells
         else:  # sparse
             idx, fps_nz, cnt_nz, off = _read_sparse_cells(blob, off, cells)
+            sk = cls(params)
             sk.fps.reshape(-1)[idx] = fps_nz
             sk.counts.reshape(-1)[idx] = cnt_nz
-        _sniff_legacy_pickle(blob[off : off + 2])
-        cand = serde_loads(blob[off:])
-        for item, c, seq in sorted(cand, key=lambda t: t[2]):
+        for item, c, seq in sorted(_read_cand(blob, off), key=lambda t: t[2]):
             sk.pq.upsert(item, c)
         return sk
 
@@ -1462,6 +1462,42 @@ def _sniff_legacy_pickle(head: bytes) -> None:
             "this library (pickled candidate section); rebuild the sketch"
         )
 
+
+def _read_header(blob: bytes) -> tuple[int, HKParams, int]:
+    """(version, params, header size) of a HeavyKeeper blob; ValueError
+    when it is too short, has the wrong magic or version, or carries
+    invalid params."""
+    if len(blob) < _HEADER.size:
+        raise ValueError("HeavyKeeper blob shorter than its header")
+    magic, ver, k, width, depth, decay, seed = _HEADER.unpack_from(blob)
+    if magic != _MAGIC or ver not in (1, 2):
+        raise ValueError("not a HeavyKeeper v1/v2 blob")
+    params = HKParams(k=k, width=width, depth=depth, decay=decay, seed=seed)
+    return ver, params, _HEADER.size
+
+
+def _read_cand(blob: bytes, off: int) -> list:
+    """The checked candidate section at ``off`` (``_check_cand``)."""
+    _sniff_legacy_pickle(blob[off : off + 2])
+    return _check_cand(serde_loads(blob[off:]))
+
+
+def _check_cand(cand) -> list:
+    """``cand`` if it is a list of ``[key, count, seq]`` triples, the
+    key an int or bytes (``_pq_key``), count and seq non-negative ints
+    below 2**64; anything else is ValueError before it reaches the
+    queue."""
+    if not isinstance(cand, list):
+        raise ValueError("candidate section is not a list")
+    for t in cand:
+        if not (
+            isinstance(t, list)
+            and len(t) == 3
+            and type(t[0]) in (int, bytes)
+            and all(type(v) is int and 0 <= v < 1 << 64 for v in t[1:])
+        ):
+            raise ValueError(f"bad candidate entry {t!r:.80}")
+    return cand
 
 
 class SketchBuilder:
@@ -1577,7 +1613,10 @@ def _read_sparse_cells(blob: bytes, off: int, cells: int):
     ``off``. ``idx`` must be strictly increasing and inside the
     ``cells`` grid: the O(nnz) merge scatters by it (a duplicate would
     silently last-write-win) and ``_sparse_cell_max`` binary-searches
-    it."""
+    it. Every count must be non-zero: the fast path's equality with the
+    dense merge rests on a v2 blob storing exactly the live cells."""
+    if off + 8 > len(blob):
+        raise ValueError("truncated sparse cell count")
     (nnz,) = struct.unpack_from("<q", blob, off)
     off += 8
     if nnz < 0 or off + 24 * nnz > len(blob):
@@ -1592,6 +1631,8 @@ def _read_sparse_cells(blob: bytes, off: int, cells: int):
     off += 8 * nnz
     cnt_nz = np.frombuffer(blob[off : off + 8 * nnz], dtype=np.uint64)
     off += 8 * nnz
+    if not cnt_nz.all():
+        raise ValueError("sparse cell with a zero count")
     return idx, fps_nz, cnt_nz, off
 
 
@@ -1599,17 +1640,11 @@ def _parse_blob_sparse(blob: bytes):
     """(params, idx, fps, cnt, cand) views of a sparse (v2) blob, or
     None for dense/v1 blobs. Same validation as ``deserialize`` but no
     dense scatter — the merge fast path reads the triplets in place."""
-    hs = struct.calcsize("<4sBqqqdq")
-    magic, ver, k, width, depth, decay, seed = struct.unpack("<4sBqqqdq", blob[:hs])
-    if magic != _MAGIC or ver != 2:
+    ver, params, off = _read_header(blob)
+    if ver != 2:
         return None
-    params = HKParams(
-        k=int(k), width=int(width), depth=int(depth), decay=float(decay), seed=int(seed)
-    )
-    idx, fps_nz, cnt_nz, off = _read_sparse_cells(blob, hs, depth * width)
-    _sniff_legacy_pickle(blob[off : off + 2])
-    cand = serde_loads(blob[off:])
-    return params, idx, fps_nz, cnt_nz, cand
+    idx, fps_nz, cnt_nz, off = _read_sparse_cells(blob, off, params.depth * params.width)
+    return params, idx, fps_nz, cnt_nz, _read_cand(blob, off)
 
 
 def merge_blobs(blobs: list[bytes]) -> bytes:

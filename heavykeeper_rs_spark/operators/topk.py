@@ -698,11 +698,7 @@ def topk_tokens(
         width=width, depth=depth, decay=decay, seed=seed,
     )
     rex = re.compile(token_re)
-    import os
-
-    ascii_ok = token_re == "[a-z]+" and os.environ.get(
-        "HK_TOKENIZE_ARROW", "1"
-    ) != "0"
+    ascii_ok = token_re == "[a-z]+"
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()

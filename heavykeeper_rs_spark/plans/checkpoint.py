@@ -294,15 +294,12 @@ def topk_tokens_checkpointed(
     most worth resuming: each partition's tokenizer pass is minutes of
     CPU, and a preempted executor costs exactly its unfinished
     partitions, not the run."""
-    import os
     import re
 
     from ..operators.topk import _feed, _feed_tokens_arrow
 
     rex = re.compile(token_re)
-    ascii_ok = token_re == "[a-z]+" and os.environ.get(
-        "HK_TOKENIZE_ARROW", "1"
-    ) != "0"
+    ascii_ok = token_re == "[a-z]+"
     keyed = df.select(F.col(text_col).cast(StringType()).alias("__text"))
 
     def feed(sk: HeavyKeeper, batch: pa.RecordBatch) -> int:

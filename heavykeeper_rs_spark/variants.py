@@ -47,6 +47,7 @@ from .kernel import (
     TopKQueue,
     _DENSE_DOMAIN_CAP,
     _as_bytes,
+    _check_cand,
     _key_array,
     _pq_key,
     _radix_argsort,
@@ -56,6 +57,16 @@ from .kernel import (
 
 _U64 = np.uint64
 _CUCKOO_SALT = _U64(0x9E3779B97F4A7C15)
+_PARAM_KEYS = frozenset(HKParams.__dataclass_fields__)
+
+
+def _state_array(d: dict, name: str, shape: tuple) -> np.ndarray:
+    """``d[name]`` if it is a uint64 array of ``shape``; the add and
+    merge paths index it by the params' width and depth."""
+    a = d.get(name)
+    if not (isinstance(a, np.ndarray) and a.dtype == np.uint64 and a.shape == shape):
+        raise ValueError(f"blob state {name!r} is not a uint64 array of shape {shape}")
+    return a
 
 
 def _mix64(x: np.ndarray | np.uint64) -> np.ndarray | np.uint64:
@@ -317,9 +328,13 @@ class _VariantBase:
             raise ValueError(f"not a {cls.__name__} blob")
         _sniff_legacy_pickle(blob[4:6])
         d = serde_loads(blob[4:])
+        if not (isinstance(d, dict) and isinstance(d.get("params"), dict)):
+            raise ValueError(f"{cls.__name__} blob has no params")
+        if set(d["params"]) != _PARAM_KEYS:
+            raise ValueError(f"{cls.__name__} blob params must be {sorted(_PARAM_KEYS)}")
         sk = cls(**d["params"])
         sk._load_state(d)
-        for item, c, _seq in sorted(d["cand"], key=lambda t: t[2]):
+        for item, c, _seq in sorted(_check_cand(d.get("cand")), key=lambda t: t[2]):
             sk.pq.upsert(item, c)
         return sk
 
@@ -336,8 +351,9 @@ class BucketedTopK(_VariantBase):
         return {"fps": self.fps, "counts": self.counts}
 
     def _load_state(self, d: dict) -> None:
-        self.fps = d["fps"]
-        self.counts = d["counts"]
+        shape = (self.params.width, self.params.depth)
+        self.fps = _state_array(d, "fps", shape)
+        self.counts = _state_array(d, "counts", shape)
 
     def add_batch(self, items: np.ndarray, weights: np.ndarray | None = None) -> None:
         keys, w, fp = self._preagg(items, weights)
@@ -582,23 +598,15 @@ class CuckooTopK(_VariantBase):
         }
 
     def _load_state(self, d: dict) -> None:
-        self.lobby_fp = d["lobby_fp"]
-        self.lobby_c = d["lobby_c"]
-        self.heavy_fp = d["heavy_fp"]
-        self.heavy_c = d["heavy_c"]
-        self.max_kicks = d["max_kicks"]
-
-    @classmethod
-    def deserialize(cls, blob: bytes):
-        if blob[:4] != cls.variant:
-            raise ValueError(f"not a {cls.__name__} blob")
-        _sniff_legacy_pickle(blob[4:6])
-        d = serde_loads(blob[4:])
-        sk = cls(**d["params"], max_kicks=d["max_kicks"])
-        sk._load_state(d)
-        for item, c, _seq in sorted(d["cand"], key=lambda t: t[2]):
-            sk.pq.upsert(item, c)
-        return sk
+        w, depth = self.params.width, self.params.depth
+        self.lobby_fp = _state_array(d, "lobby_fp", (w,))
+        self.lobby_c = _state_array(d, "lobby_c", (w,))
+        self.heavy_fp = _state_array(d, "heavy_fp", (w, depth))
+        self.heavy_c = _state_array(d, "heavy_c", (w, depth))
+        max_kicks = d.get("max_kicks")
+        if type(max_kicks) is not int or max_kicks < 1:
+            raise ValueError(f"blob max_kicks must be an int >= 1, got {max_kicks!r}")
+        self.max_kicks = max_kicks
 
     def _pair(self, fp: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """bucket_pair (src/cuckoo.rs:569-580), vectorized."""
