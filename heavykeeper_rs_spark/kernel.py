@@ -43,7 +43,6 @@ from __future__ import annotations
 import heapq
 import io
 import math
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -55,11 +54,11 @@ from .serde import dumps as serde_dumps, loads as serde_loads
 
 _U64 = np.uint64
 # add_batch dense-preagg bound: bincount table never exceeds this many
-# slots (8 B each; the default caps the transient at a few MB per task
+# slots (8 B each; this caps the transient at a few MB per task
 # so 32 concurrent workers' tables stay L3-resident together —
 # per-worker wins above that are paid back in shared memory-bandwidth
-# contention). HK_DENSE_CAP=0 disables the dense lane entirely.
-_DENSE_DOMAIN_CAP = int(os.environ.get("HK_DENSE_CAP", 1 << 22))
+# contention).
+_DENSE_DOMAIN_CAP = 1 << 22
 _HASH_COMPOSE_K = _U64(0x517CC1B727220A95)  # src/hash_composition.rs:15
 _DEFAULT_SEED = 12345  # src/heavykeeper.rs:111-115 (fixed default seed)
 _MAGIC = b"HKS1"

@@ -1,12 +1,13 @@
 """Generic distributed sketch aggregation.
 
-One runner for the whole sketch family: partial build per partition
-(``mapInArrow``), salted combine (``groupBy(salt).applyInPandas``),
-final merge on the driver. Identical plan shape to operators/topk.py —
-only the sketch kernel differs. The shuffle carries only serialized
-sketch blobs (KiB-scale), never rows, so the plan's network cost is
-O(partitions), independent of input size: the property that makes this
-viable at 10^12 rows.
+The HLL / CountMin / Bloom / KLL / t-digest families on the runner of
+operators/topk.py: partial build per partition (``mapInArrow``), the
+salted bounded-fan-in merge tree ``operators.topk._tree_merge``
+(through ``_sketch_tree``, or ``grouped_blob_tree`` per group), final
+merge on the driver — only the sketch kernel differs. The shuffle
+carries only serialized sketch blobs (KiB-scale), never rows, so the
+plan's network cost is O(partitions), independent of input size: the
+property that makes this viable at 10^12 rows.
 
 Also exposes DataFrame-level conveniences:
 - hll_distinct(df, col)          -> float estimate
@@ -18,18 +19,17 @@ Also exposes DataFrame-level conveniences:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -40,9 +40,13 @@ from ..sketches.cms import CountMin
 from ..sketches.hll import HLL
 from ..sketches.kll import KLL
 from ..sketches.tdigest import TDigest
-
-_BLOB_SCHEMA = StructType(
-    [StructField("salt", IntegerType(), False), StructField("sketch", BinaryType(), False)]
+from .topk import (
+    _blob_batch,
+    _fold_blobs,
+    _partition_id,
+    _sketch_tree,
+    grouped_blob_tree,
+    grouped_partial_builder,
 )
 
 
@@ -58,6 +62,15 @@ def _sketch_seed(sk) -> int:
     if s is None:
         s = getattr(getattr(sk, "params", None), "seed", None)
     return int(s) if s is not None else 0
+
+
+def _seeded(make: Callable[[], object], pid: int):
+    """``make()`` with its RNG, if it has one (KLL compaction), seeded
+    per input partition ``pid``."""
+    sk = make()
+    if hasattr(sk, "rng"):
+        sk.rng = np.random.default_rng(np.random.PCG64((_sketch_seed(sk) << 7) + pid))
+    return sk
 
 
 def sketch_agg(
@@ -77,66 +90,32 @@ def sketch_agg(
     keyed = df.select(*cols)
     weighted = weight_col is not None
 
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        saw = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw = True
-            v = batch.column(0).to_numpy(zero_copy_only=False)
-            if weighted:
-                w = batch.column(1).to_numpy(zero_copy_only=False)
-                valid = pd.notna(v) & pd.notna(w)
-                sk.add_batch(v[valid], np.asarray(w[valid], dtype=np.float64))
-            else:
-                valid = pd.notna(v)
-                sk.add_batch(v[valid])
-        if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
+    def builder(n_parts: int):
+        def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            pid = _partition_id()
+            sk = _seeded(make, pid)
+            saw = False
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                saw = True
+                v = batch.column(0).to_numpy(zero_copy_only=False)
+                if weighted:
+                    w = batch.column(1).to_numpy(zero_copy_only=False)
+                    valid = pd.notna(v) & pd.notna(w)
+                    sk.add_batch(v[valid], np.asarray(w[valid], dtype=np.float64))
+                else:
+                    valid = pd.notna(v)
+                    sk.add_batch(v[valid])
+            if saw:
+                yield _blob_batch(pid % n_parts, sk)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = list(pdf["sketch"])
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return pd.DataFrame({"salt": [int(pdf["salt"].iloc[0])], "sketch": [acc.serialize()]})
+        return build
 
-    # multi-level bounded-fan-in merge tree (see operators/topk.py
-    # _tree_merge): salt starts as partition id, divides by fan_in per
-    # level until <= fan_in blobs reach the driver
-    from .topk import estimate_partitions
-
-    n_parts = estimate_partitions(keyed)
-    fan_in = max(int(merge_groups), 2)  # caller's fan-in, BEFORE rebinding
-    merge_groups = n_parts  # build closure salts by pid
-    combined = keyed.mapInArrow(build, _BLOB_SCHEMA)
-    groups = n_parts
-    while groups > fan_in:
-        combined = (
-            combined.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_group, _BLOB_SCHEMA)
-        )
-        groups = -(-groups // fan_in)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    if not blobs:
-        return make()
-    acc = deserialize(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(deserialize(b))
-    return acc
+    fold = functools.partial(_fold_blobs, deserialize)
+    return _sketch_tree(
+        keyed, builder, lambda blobs: fold(blobs).serialize(), fold, make, merge_groups
+    )
 
 
 # ---------------------------------------------------------------- wrappers
@@ -198,53 +177,43 @@ def sketch_by_group(
 
     ``deserialize`` defaults to ``type(make()).deserialize``.
     """
-    from .topk import grouped_blob_tree
-
-    out_schema = StructType(
-        [
-            StructField("group", StringType(), False),
-            StructField(out_col, DoubleType(), False),
-        ]
+    return _grouped_sketch(
+        df, group_col, value_col, make, numeric, deserialize, fan_in,
+        max_live_groups, StructField(out_col, DoubleType(), False),
+        lambda sk: float(finalize(sk)),
     )
-    cast = DoubleType() if numeric else StringType()
+
+
+def _grouped_sketch(
+    df, group_col, value_col, make, numeric, deserialize, fan_in,
+    max_live_groups, out_field: StructField, finalize,
+) -> DataFrame:
+    """``sketch_by_group`` / ``sketch_blobs_by_group``: the merged
+    sketch of each group becomes the ``out_field`` value
+    ``finalize(sketch)``."""
     if deserialize is None:
         deserialize = type(make()).deserialize
-
-    from .topk import grouped_partial_builder
-
-    def new_sketch(pid: int):
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        return sk
+    fold = functools.partial(_fold_blobs, deserialize)
+    dtype = np.float64 if numeric else object
 
     def feed(sk, vals) -> None:
-        if numeric:
-            sk.add_batch(np.asarray(vals, dtype=np.float64))
-        else:
-            sk.add_batch(np.asarray(vals, dtype=object))
-
-    build = grouped_partial_builder(new_sketch, feed, max_live_groups)
-
-    def merge_fn(blobs: list[bytes]) -> bytes:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return acc.serialize()
+        sk.add_batch(np.asarray(vals, dtype=dtype))
 
     def final(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return pd.DataFrame({"group": [group], out_col: [float(finalize(acc))]})
+        return pd.DataFrame({"group": [group], out_field.name: [finalize(fold(blobs))]})
 
     keyed = df.select(
         F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
-        F.col(value_col).cast(cast).alias("__v"),
+        F.col(value_col).cast(DoubleType() if numeric else StringType()).alias("__v"),
     )
-    return grouped_blob_tree(keyed, build, merge_fn, final, out_schema, fan_in=fan_in)
+    return grouped_blob_tree(
+        keyed,
+        grouped_partial_builder(functools.partial(_seeded, make), feed, max_live_groups),
+        lambda blobs: fold(blobs).serialize(),
+        final,
+        StructType([StructField("group", StringType(), False), out_field]),
+        fan_in=fan_in,
+    )
 
 
 def hll_distinct_by_group(
@@ -294,48 +263,11 @@ def sketch_blobs_by_group(
     group-specific keys afterwards (grouped CMS point queries, grouped
     Bloom membership), or persist them as a sketch table for reuse.
     """
-    from .topk import grouped_blob_tree, grouped_partial_builder
-
-    out_schema = StructType(
-        [
-            StructField("group", StringType(), False),
-            StructField("sketch", BinaryType(), False),
-        ]
+    return _grouped_sketch(
+        df, group_col, value_col, make, numeric, deserialize, fan_in,
+        max_live_groups, StructField("sketch", BinaryType(), False),
+        lambda sk: sk.serialize(),
     )
-    cast = DoubleType() if numeric else StringType()
-    if deserialize is None:
-        deserialize = type(make()).deserialize
-
-    def new_sketch(pid: int):
-        sk = make()
-        if hasattr(sk, "rng"):
-            sk.rng = np.random.default_rng(
-                np.random.PCG64((_sketch_seed(sk) << 7) + pid)
-            )
-        return sk
-
-    def feed(sk, vals) -> None:
-        if numeric:
-            sk.add_batch(np.asarray(vals, dtype=np.float64))
-        else:
-            sk.add_batch(np.asarray(vals, dtype=object))
-
-    build = grouped_partial_builder(new_sketch, feed, max_live_groups)
-
-    def merge_fn(blobs: list[bytes]) -> bytes:
-        acc = deserialize(blobs[0])
-        for b in blobs[1:]:
-            acc.merge(deserialize(b))
-        return acc.serialize()
-
-    def final(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        return pd.DataFrame({"group": [group], "sketch": [merge_fn(blobs)]})
-
-    keyed = df.select(
-        F.coalesce(F.col(group_col).cast(StringType()), F.lit("None")).alias("__g"),
-        F.col(value_col).cast(cast).alias("__v"),
-    )
-    return grouped_blob_tree(keyed, build, merge_fn, final, out_schema, fan_in=fan_in)
 
 
 def cms_by_group(

@@ -7,11 +7,17 @@ aggregate, exactly the shape of Catalyst's HashAggregateExec pair:
   partial:  per-partition sketch build inside ``mapInArrow`` (Arrow
             batches → np.unique pre-aggregation → vectorized kernel)
   combine:  salted multi-level ``groupBy(salt).applyInPandas`` merge
-            tree with bounded fan-in (see ``_tree_merge``) — the
+            tree with bounded fan-in (``_tree_merge``) — the
             explicit skew control demanded by the north rule: no
             single reducer ever merges more than ``fan_in`` blobs
   final:    driver merges the ≤ fan_in surviving blobs and emits an
             ordered result DataFrame
+
+``_tree_merge`` is the package's only merge tree: the ungrouped runner
+(``_sketch_tree``: ``topk``, ``topk_sketch``, ``topk_tokens`` and
+``operators.agg.sketch_agg``), the per-group runner
+(``grouped_blob_tree``) and the checkpointed builds in
+``plans.checkpoint`` all fold their partials through it.
 
 Scale notes (100 TB / 1000-executor thinking):
 - The shuffles move only sketch blobs (~KiB–MiB each), never row
@@ -26,6 +32,7 @@ Scale notes (100 TB / 1000-executor thinking):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Iterator
 
@@ -167,10 +174,8 @@ def effective_scan_tasks(df: DataFrame) -> int:
 #: at sf0.1: fanning out a 0.6 MB documents scan cost +0.1-0.3 s per
 #: query). Size-based, so the SAME code takes the single-task plan on
 #: toy inputs and the fan-out on anything where one core would be the
-#: bottleneck; override via HK_SCAN_FANOUT_MIN_MB.
-_FANOUT_MIN_BYTES = int(
-    float(os.environ.get("HK_SCAN_FANOUT_MIN_MB", "4")) * (1 << 20)
-)
+#: bottleneck.
+_FANOUT_MIN_BYTES = 4 << 20
 
 
 def _input_bytes(files: list[str]) -> int | None:
@@ -260,19 +265,55 @@ def _make_sketch(variant: str, params: HKParams, rng):
     )
 
 
+def _hk_rng(seed: int, pid: int) -> np.random.Generator:
+    """Decay-duel RNG of a HeavyKeeper-family partial built by input
+    partition ``pid``: distinct per partition, reproducible per seed."""
+    return np.random.default_rng(
+        np.random.PCG64(((seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
+    )
+
+
+def _partition_id() -> int:
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+def _blob_batch(salt: int, sk) -> pa.RecordBatch:
+    """The one-row (salt, sketch) batch a partial emits."""
+    return pa.RecordBatch.from_pydict(
+        {
+            "salt": pa.array([salt], type=pa.int32()),
+            "sketch": pa.array([sk.serialize()], type=pa.binary()),
+        }
+    )
+
+
 def _deserialize_variant(variant: str, blob: bytes):
     if variant == "topk":
         return HeavyKeeper.deserialize(blob)
     return VARIANTS[variant].deserialize(blob)
 
 
+def _fold_blobs(deserialize, blobs: list[bytes]):
+    """Deserialize ``blobs`` and merge them, in order, into the first:
+    the merge of every sketch family without a blob-level merge."""
+    acc = deserialize(blobs[0])
+    for b in blobs[1:]:
+        acc.merge(deserialize(b))
+    return acc
+
+
 def _merge_variant_blobs(variant: str, blobs: list[bytes]) -> bytes:
+    # ``merge_blobs`` is looked up in this module's globals at call
+    # time, so a wrapper installed on ``operators.topk.merge_blobs``
+    # sees every canonical merge, in tree tasks and on the driver
     if variant == "topk":
         return merge_blobs(blobs)
-    acc = _deserialize_variant(variant, blobs[0])
-    for b in blobs[1:]:
-        acc.merge(_deserialize_variant(variant, b))
-    return acc.serialize()
+    return _fold_blobs(VARIANTS[variant].deserialize, blobs).serialize()
+
+
+def _merged_variant(variant: str, blobs: list[bytes]):
+    return _deserialize_variant(variant, _merge_variant_blobs(variant, blobs))
 
 
 def _feed_str_col(sk, col: pa.Array, w: np.ndarray | None, seed: int, hashed: bool):
@@ -336,12 +377,8 @@ def _build_partial(
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = _make_sketch(variant, params, rng)
+        pid = _partition_id()
+        sk = _make_sketch(variant, params, _hk_rng(params.seed, pid))
         saw = False
         kbuf: list[pa.Array] = []
         wbuf: list[np.ndarray] = []
@@ -395,29 +432,7 @@ def _build_partial(
                 flush()
         flush()
         if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
-
-    return fn
-
-
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    salt = int(pdf["salt"].iloc[0])
-    blob = merge_blobs(list(pdf["sketch"]))
-    return pd.DataFrame({"salt": [salt], "sketch": [blob]})
-
-
-def _merge_group_variant(variant: str):
-    if variant == "topk":
-        return _merge_group
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = _merge_variant_blobs(variant, list(pdf["sketch"]))
-        return pd.DataFrame({"salt": [int(pdf["salt"].iloc[0])], "sketch": [blob]})
+            yield _blob_batch(pid % merge_groups, sk)
 
     return fn
 
@@ -457,30 +472,38 @@ def topk_sketch(
     if weighted:
         cols.append(F.col(weight_col).cast(LongType()).alias("__w"))
     keyed = df.select(*cols)  # column pruning: scan reads only these
-    n_parts = estimate_partitions(keyed)
-    partials = keyed.mapInArrow(
-        _build_partial(params, max(n_parts, 1), weighted, variant), _BLOB_SCHEMA
+    return _sketch_tree(
+        keyed,
+        lambda n_parts: _build_partial(params, n_parts, weighted, variant),
+        functools.partial(_merge_variant_blobs, variant),
+        functools.partial(_merged_variant, variant),
+        lambda: _make_sketch(variant, params, None),
+        merge_groups,
     )
-    combined = _tree_merge(partials, variant, n_parts, fan_in=merge_groups)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    if not blobs:
-        return _make_sketch(variant, params, None)
-    return _deserialize_variant(variant, _merge_variant_blobs(variant, blobs))
 
 
 def _tree_merge(
-    partials: DataFrame, variant: str, n_groups: int, fan_in: int = 64
+    partials: DataFrame,
+    n_groups: int,
+    fan_in: int,
+    level,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Multi-level salted merge tree with bounded fan-in.
+    """The multi-level salted merge tree with bounded fan-in, shared by
+    every sketch aggregation in the package.
 
-    ``salt`` starts as the partition id; each level integer-divides it
-    by ``fan_in`` and merges within the group, shrinking the blob count
-    fan_in-fold, until at most ``fan_in`` blobs remain for the driver.
-    fan_in=64 by default: collecting 64 KiB-to-MiB blobs to one place
-    is cheap, while an extra applyInPandas level costs a whole stage of
-    latency (measured: the 32->4 level tripled a 40M-key job's wall
-    time); at 10^5 partitions two 64-way levels still bound every
-    reducer.
+    ``partials`` carries the ``keys`` columns, an int ``salt`` and a
+    ``sketch`` blob; ``n_groups`` is the (estimated) number of distinct
+    salts per key. Each level integer-divides ``salt`` by ``fan_in``
+    and runs ``level(pdf) -> pdf`` once per ``(*keys, salt)`` group; it
+    must return one row of ``partials``' schema. The blob count per key
+    shrinks fan_in-fold per level until at most ``fan_in`` remain for
+    the caller's final fold.
+    The public entry points default fan_in to 64: collecting 64
+    KiB-to-MiB blobs to one place is cheap, while an extra
+    applyInPandas level costs a whole stage of latency (measured: the
+    32->4 level tripled a 40M-key job's wall time); at 10^5 partitions
+    two 64-way levels still bound every reducer.
     No reducer ever folds more than fan_in blobs, so the combine
     stage's critical path is O(fan_in * log_{fan_in}(partitions))
     merges — treeAggregate shape. (The reference's pairwise merge
@@ -488,18 +511,40 @@ def _tree_merge(
     depth=n version.) Level count is derived from the known partition
     count, so small jobs keep a single shuffle.
     """
-    merge_fn = _merge_group_variant(variant)
-    out = partials
     groups = max(int(n_groups), 1)
     fan_in = max(int(fan_in), 2)  # fan_in <= 1 would never converge
     while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_fn, _BLOB_SCHEMA)
+        partials = (
+            partials.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
+            .groupBy(*keys, "salt")
+            .applyInPandas(level, partials.schema)
         )
         groups = -(-groups // fan_in)  # ceil div
-    return out
+    return partials
+
+
+def _blob_level(merge):
+    """``_tree_merge`` level folding one group's blobs with
+    ``merge(blobs) -> blob``; the other columns keep the group's
+    values."""
+
+    def level(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.head(1).assign(sketch=[merge(list(pdf["sketch"]))])
+
+    return level
+
+
+def _sketch_tree(keyed: DataFrame, builder, merge, fold, fresh, fan_in: int):
+    """The ungrouped runner: ``builder(n_parts)`` is the ``mapInArrow``
+    kernel that emits one (salt, sketch) row per non-empty input
+    partition, ``_tree_merge`` folds those blobs with ``merge(blobs) ->
+    blob`` and the driver folds the survivors with ``fold(blobs) ->
+    sketch`` — or returns ``fresh()`` when the input had no rows."""
+    n_parts = estimate_partitions(keyed)
+    partials = keyed.mapInArrow(builder(n_parts), _BLOB_SCHEMA)
+    combined = _tree_merge(partials, n_parts, fan_in, _blob_level(merge))
+    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
+    return fold(blobs) if blobs else fresh()
 
 
 def topk(
@@ -700,58 +745,49 @@ def topk_tokens(
     rex = re.compile(token_re)
     ascii_ok = token_re == "[a-z]+"
 
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = HeavyKeeper(params, rng=rng)
-        saw = False
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            saw = True
-            if ascii_ok and _feed_tokens_arrow(
-                sk, batch.column(0), max_token_len, params.seed
-            ):
-                continue
-            texts = batch.column(0).to_numpy(zero_copy_only=False)
-            # chunked join: one C-level regex pass per ~4 MB of text —
-            # NOT one batch-wide string (64k multi-KB docs would build
-            # a transient multi-hundred-MB str)
-            chunk: list[str] = []
-            size = 0
-            for t in texts:
-                if t is None:
+    def builder(merge_groups: int):
+        def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            pid = _partition_id()
+            sk = HeavyKeeper(params, rng=_hk_rng(params.seed, pid))
+            saw = False
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                chunk.append(t)
-                size += len(t)
-                if size < (4 << 20):
+                saw = True
+                if ascii_ok and _feed_tokens_arrow(
+                    sk, batch.column(0), max_token_len, params.seed
+                ):
                     continue
-                _feed(sk, rex, chunk, max_token_len)
-                chunk, size = [], 0
-            if chunk:
-                _feed(sk, rex, chunk, max_token_len)
-        if saw:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "salt": pa.array([pid % merge_groups], type=pa.int32()),
-                    "sketch": pa.array([sk.serialize()], type=pa.binary()),
-                }
-            )
+                texts = batch.column(0).to_numpy(zero_copy_only=False)
+                # chunked join: one C-level regex pass per ~4 MB of text
+                # — NOT one batch-wide string (64k multi-KB docs would
+                # build a transient multi-hundred-MB str)
+                chunk: list[str] = []
+                size = 0
+                for t in texts:
+                    if t is None:
+                        continue
+                    chunk.append(t)
+                    size += len(t)
+                    if size < (4 << 20):
+                        continue
+                    _feed(sk, rex, chunk, max_token_len)
+                    chunk, size = [], 0
+                if chunk:
+                    _feed(sk, rex, chunk, max_token_len)
+            if saw:
+                yield _blob_batch(pid % merge_groups, sk)
+
+        return build
 
     keyed = df.select(F.col(text_col).cast(StringType()).alias("__text"))
-    n_parts = estimate_partitions(keyed)
-    fan_in = merge_groups  # caller's fan-in, BEFORE the salt rebinding
-    merge_groups = max(n_parts, 1)
-    partials = keyed.mapInArrow(build, _BLOB_SCHEMA)
-    combined = _tree_merge(partials, "topk", n_parts, fan_in=fan_in)
-    blobs = [r["sketch"] for r in combined.select("sketch").collect()]
-    sk = (
-        HeavyKeeper(params)
-        if not blobs
-        else HeavyKeeper.deserialize(merge_blobs(blobs))
+    sk = _sketch_tree(
+        keyed,
+        builder,
+        functools.partial(_merge_variant_blobs, "topk"),
+        functools.partial(_merged_variant, "topk"),
+        lambda: HeavyKeeper(params),
+        merge_groups,
     )
     rows = sk.list()
     if tie_break_key:
@@ -803,8 +839,7 @@ def grouped_partial_builder(
     cap = max(int(max_live_groups), 2)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+        pid = _partition_id()
         sketches: dict[str, object] = {}
         touch: dict[str, int] = {}
         t = 0
@@ -885,7 +920,7 @@ def grouped_blob_tree(
     """Shared scaffold for per-group sketch aggregation that never
     shuffles rows — only serialized sketch blobs.
 
-    Shape (the per-group analog of ``_tree_merge``):
+    Shape (``_tree_merge`` with ``group`` as the extra key):
 
       partial:  ``build_partials`` runs in ``mapInArrow`` and emits one
                 (group, salt=partition_id, blob) row per (partition,
@@ -903,26 +938,10 @@ def grouped_blob_tree(
                 ``finalize_fn`` to emit result rows.
     """
     n_parts = estimate_partitions(keyed)
-    fan_in = max(int(fan_in), 2)  # fan_in <= 1 would never converge
-    out = keyed.mapInArrow(build_partials, _GROUP_BLOB_SCHEMA)
-
-    def merge_level(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "sketch": [merge_blobs_fn(list(pdf["sketch"]))],
-            }
-        )
-
-    groups = n_parts
-    while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("group", "salt")
-            .applyInPandas(merge_level, _GROUP_BLOB_SCHEMA)
-        )
-        groups = -(-groups // fan_in)  # ceil div
+    partials = keyed.mapInArrow(build_partials, _GROUP_BLOB_SCHEMA)
+    out = _tree_merge(
+        partials, n_parts, fan_in, _blob_level(merge_blobs_fn), ("group",)
+    )
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         return finalize_fn(str(pdf["group"].iloc[0]), list(pdf["sketch"]))
@@ -978,13 +997,7 @@ def topk_by_group(
     )
 
     def new_sketch(pid: int):
-        return _make_sketch(
-            variant,
-            params,
-            np.random.default_rng(
-                np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-            ),
-        )
+        return _make_sketch(variant, params, _hk_rng(params.seed, pid))
 
     weighted = weight_col is not None
     if weighted:
@@ -1002,8 +1015,7 @@ def topk_by_group(
         )
 
     def finalize(group: str, blobs: list[bytes]) -> pd.DataFrame:
-        sk = _deserialize_variant(variant, _merge_variant_blobs(variant, blobs))
-        rows = sk.list()
+        rows = _merged_variant(variant, blobs).list()
         if tie_break_key:
             rows = sorted(rows, key=lambda t: (-t[1], t[0]))
         rows = rows[:k]
@@ -1025,7 +1037,7 @@ def topk_by_group(
     return grouped_blob_tree(
         keyed,
         build,
-        lambda blobs: _merge_variant_blobs(variant, blobs),
+        functools.partial(_merge_variant_blobs, variant),
         finalize,
         out_schema,
         fan_in=fan_in,

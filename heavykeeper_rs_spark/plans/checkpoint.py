@@ -14,9 +14,11 @@ them makes the whole aggregation resumable:
   checkpoint from a different sketch shape, build mode, or input
   lineage is refused, not silently merged;
 - the combine stage is the SAME bounded-fan-in merge tree as the
-  non-checkpointed paths (no reducer ever folds more than ``fan_in``
-  blobs — at 10^5 partitions the critical path is
-  O(fan_in · log_fan_in(n)) merges, not one O(n) fold);
+  non-checkpointed paths, ``operators.topk._tree_merge``, with
+  ``_merge_status_level`` folding the resumed/computed counters next
+  to the blobs (no reducer ever folds more than ``fan_in`` blobs — at
+  10^5 partitions the critical path is O(fan_in · log_fan_in(n))
+  merges, not one O(n) fold);
 - the final merged sketch is written to ``{dir}/final.bin``; a
   completed job resumes in O(1).
 
@@ -37,15 +39,14 @@ import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
 
 from ..kernel import HeavyKeeper, HKParams, merge_blobs
+from ..operators.topk import _hk_rng, _merged_variant, _partition_id, _tree_merge
 
 _CKPT_SCHEMA = StructType(
     [
@@ -104,40 +105,21 @@ def _parse_status(s: str) -> tuple[int, int]:
     return res, comp
 
 
-def _tree_merge_status(partials: DataFrame, n_groups: int, fan_in: int) -> DataFrame:
-    """Bounded-fan-in merge tree over (salt, sketch, status) rows — the
-    checkpoint twin of ``operators.topk._tree_merge`` that also folds
-    the resumed/computed counters. ``salt`` starts as the partition id;
-    each level integer-divides it by ``fan_in``, so no reducer ever
-    folds more than ``fan_in`` blobs and 10^5 partitions merge through
-    ~log_fan_in(10^5) levels instead of one sequential O(n) fold."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_blobs(list(pdf["sketch"]))
-        res = comp = 0
-        for s in pdf["status"]:
-            r, c = _parse_status(s)
-            res += r
-            comp += c
-        return pd.DataFrame(
-            {
-                "salt": [int(pdf["salt"].iloc[0])],
-                "sketch": [blob],
-                "status": [f"resumed:{res},computed:{comp}"],
-            }
-        )
-
-    out = partials
-    groups = max(int(n_groups), 1)
-    fan_in = max(int(fan_in), 2)
-    while groups > fan_in:
-        out = (
-            out.withColumn("salt", (F.col("salt") / fan_in).cast("int"))
-            .groupBy("salt")
-            .applyInPandas(merge_group, _CKPT_SCHEMA)
-        )
-        groups = -(-groups // fan_in)  # ceil div
-    return out
+def _merge_status_level(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``_tree_merge`` level over (salt, sketch, status) rows: merges
+    the blobs and sums the resumed/computed counters."""
+    res = comp = 0
+    for s in pdf["status"]:
+        r, c = _parse_status(s)
+        res += r
+        comp += c
+    return pd.DataFrame(
+        {
+            "salt": [int(pdf["salt"].iloc[0])],
+            "sketch": [merge_blobs(list(pdf["sketch"]))],
+            "status": [f"resumed:{res},computed:{comp}"],
+        }
+    )
 
 
 def _checkpointed_sketch(
@@ -176,8 +158,7 @@ def _checkpointed_sketch(
         return sk, CheckpointReport(n_parts, n_parts, 0, True)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+        pid = _partition_id()
         blob_path = f"{ckpt_dir}/partials/part-{pid:05d}.bin"
         if os.path.exists(blob_path):
             # resume: emit the saved partial, skip all sketch work
@@ -189,10 +170,7 @@ def _checkpointed_sketch(
                 }
             )
             return
-        rng = np.random.default_rng(
-            np.random.PCG64(((params.seed << 17) ^ 0x9E3779B97F4A7C15) + pid)
-        )
-        sk = HeavyKeeper(params, rng=rng)
+        sk = HeavyKeeper(params, rng=_hk_rng(params.seed, pid))
         t0 = time.time()
         rows = 0
         for batch in batches:
@@ -223,17 +201,16 @@ def _checkpointed_sketch(
         )
 
     partials = keyed.mapInArrow(build, _CKPT_SCHEMA)
-    combined = _tree_merge_status(partials, n_input_parts, fan_in).collect()
+    combined = _tree_merge(
+        partials, n_input_parts, fan_in, _merge_status_level
+    ).collect()
     resumed = computed = 0
     for r in combined:
         res, comp = _parse_status(r["status"])
         resumed += res
         computed += comp
     blobs = [r["sketch"] for r in combined]
-    if not blobs:
-        sk = HeavyKeeper(params)
-    else:
-        sk = HeavyKeeper.deserialize(merge_blobs(blobs))
+    sk = _merged_variant("topk", blobs) if blobs else HeavyKeeper(params)
     _atomic_write(final_path, sk.serialize())
     summary = {
         "token": token,

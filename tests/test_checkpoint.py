@@ -114,9 +114,10 @@ def test_checkpoint_merge_is_bounded_fan_in_tree(spark, events, tmp_path):
     """256 partitions with fan_in=8 must merge through a TREE
     (256 -> 32 -> 4: two applyInPandas levels), never one reducer
     folding O(n_parts) blobs (VERDICT r2 'What's wrong' #2)."""
+    from heavykeeper_rs_spark.operators.topk import _tree_merge
     from heavykeeper_rs_spark.plans.checkpoint import (
         _CKPT_SCHEMA,
-        _tree_merge_status,
+        _merge_status_level,
     )
 
     many = events.repartition(256)
@@ -137,7 +138,7 @@ def test_checkpoint_merge_is_bounded_fan_in_tree(spark, events, tmp_path):
 
     fake = spark.createDataFrame([], schema=_CKPT_SCHEMA)
     plan = (
-        _tree_merge_status(fake, 256, 8)
+        _tree_merge(fake, 256, 8, _merge_status_level)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()

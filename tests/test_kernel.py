@@ -357,16 +357,7 @@ def test_dense_preagg_matches_factorize():
     with the khash-factorize lane: identical exact counts on an
     uncontended fixture (where order effects cannot matter), identical
     (unique, weight) multisets on weighted and cancelling inputs."""
-    import heavykeeper_rs_spark.kernel as _K
-    import heavykeeper_rs_spark.variants as _V
-
-    # pin the cap so the test is independent of HK_DENSE_CAP in the env
-    old_caps = _K._DENSE_DOMAIN_CAP, _V._DENSE_DOMAIN_CAP
-    _K._DENSE_DOMAIN_CAP = _V._DENSE_DOMAIN_CAP = 1 << 22
-    try:
-        _dense_preagg_body()
-    finally:
-        _K._DENSE_DOMAIN_CAP, _V._DENSE_DOMAIN_CAP = old_caps
+    _dense_preagg_body()
 
 
 def _dense_preagg_body():
